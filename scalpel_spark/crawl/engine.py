@@ -4,8 +4,9 @@ One round (SURVEY §3.4):
 
   pending frontier     (delta view: base ∪ link-deltas − fetched
                         tombstones; never rewritten, see below)
-    → politeness batch (broadcast robots join; two-phase salted
-                        window-rank per host — skew-bounded top-k)
+    → politeness batch (broadcast robots join; one row_number per
+                        host, cut at a literal k — Spark plans a
+                        partial top-k below the host shuffle)
     → fetch            (corpus mode: broadcast-inner resolver join —
                         the corpus is scanned in place, never shuffled;
                         http mode: GET inside the task, URL.hs:72-82)
@@ -81,15 +82,18 @@ Scale notes (10^10 frontier, 1000 executors):
   data: the politeness window (O(pending) — the priority queue), link
   dedup (O(links/round)), bloom shard grouping (O(new/round)). The
   corpus, the seen history, and the frontier base move zero bytes.
-* politeness ranking partitions by host; hot hosts are pre-pruned by a
-  salted first-phase top-k so no partition ever sees more than
-  ``n_salts × budget`` rows per host.
-* global fetch_seq is a row_number over the *politeness-bounded* batch
-  (≤ Σ per-host budgets per round), not over the frontier; the
-  host-order prefix sum is a two-level scan (range-partitioned local
-  cumsum + a partition-offset pass over ≤ shuffle-partitions rows), so
-  no window ever runs on a single partition regardless of host
-  cardinality.
+* politeness ranking partitions by host. The rank filter carries a
+  literal bound k (the largest per-host budget), which Spark turns into
+  a ``WindowGroupLimit`` Partial below the host Exchange: each map task
+  ships at most k rows per host, so a hot host's window partition is
+  bounded by k × map tasks, not by its pending count. Spark only
+  inserts the limit while k ≤ ``spark.sql.optimizer.
+  windowGroupLimitThreshold`` (default 1000); above it the plan is an
+  unbounded per-host window — still exact, just not skew-bounded.
+* global fetch_seq is computed over the *politeness-bounded* batch
+  (≤ Σ per-host budgets per round), not over the frontier: one global
+  row_number over (host, rank) for small pendings, else per-host counts
+  prefix-summed over one row per host and broadcast back.
 * exact resume: state lives in per-round parquet + manifest
   (tableio.SnapshotStore); a torn round never commits. The broadcast
   bloom is rebuilt from the committed deltas on resume (one
@@ -100,18 +104,8 @@ Scale notes (10^10 frontier, 1000 executors):
 from __future__ import annotations
 
 import os
-import sys
 import time
 from typing import Iterable
-
-_TRACE = os.environ.get("SCALPEL_CRAWL_TRACE", "") == "1"
-
-
-def _trace(msg: str, t0: float) -> float:
-    t = time.perf_counter()
-    if _TRACE:
-        print(f"[crawl-trace] {msg}: {t - t0:.2f}s", file=sys.stderr, flush=True)
-    return t
 
 import numpy as np
 import pandas as pd
@@ -250,6 +244,12 @@ class CrawlEngine:
     materializations. Between compactions the pending view carries one
     broadcast tombstone set of ≤ C × Σ budgets keys; raising C trades
     broadcast size for fewer O(pending) writes.
+
+    ``budget_scale``: multiplies every per-host politeness budget. The
+    politeness window is skew-bounded by a partial top-k only while the
+    largest scaled budget is ≤ ``spark.sql.optimizer.
+    windowGroupLimitThreshold``; above it ranking stays exact, but each
+    host's window partition holds all of that host's pending rows.
     """
 
     def __init__(
@@ -258,7 +258,6 @@ class CrawlEngine:
         corpus_dir: str,
         out_dir: str,
         max_rounds: int = 50,
-        n_salts: int = 8,
         bloom_shards: int = 16,
         bloom_bits_per_shard: int = 1 << 20,
         bloom_k: int = 7,
@@ -276,7 +275,6 @@ class CrawlEngine:
         self.corpus_dir = corpus_dir
         self.store = SnapshotStore(out_dir)
         self.max_rounds = max_rounds
-        self.n_salts = n_salts
         self._bloom_cfg = (bloom_shards, bloom_bits_per_shard, bloom_k)
         self.bloom_mode = bloom_mode
         self.bloom_compact_every = bloom_compact_every
@@ -325,13 +323,11 @@ class CrawlEngine:
             F.col("max_fetches_per_round").alias("budget"),
             F.col("disallow_prefixes").alias("disallow"),
         ).persist()
-        # known-host cardinality decides the fetch_seq prefix-sum shape:
-        # below the threshold a single window over one-row-per-host is
-        # cheapest; above it the two-level range-partitioned scan keeps
-        # every window partition-parallel (one tiny count job, at init
-        # only — never per round)
-        self._n_known_hosts = self.robots.count()  # also materializes the cache
-        self._two_level_scan = self._n_known_hosts > 100_000
+        # the largest per-host budget is the literal top-k bound of the
+        # politeness window (one job at init, which also materializes
+        # the robots cache)
+        max_budget = self.robots.agg(F.max("budget")).first()[0]
+        self._max_budget = max(max_budget or 0, DEFAULT_BUDGET) * self.budget_scale
 
     # ------------------------------------------------------------------
 
@@ -646,67 +642,44 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------
 
-    #: pending-frontier size below which the salted pre-phase is skipped:
-    #: the salt window exists to bound a HOT host's partition to
-    #: n_salts × budget rows, but when the WHOLE pending set fits one
-    #: sort task comfortably (narrow rows; 200k ≈ 20 MB) the worst-case
-    #: host partition is already bounded by it, and the pre-phase only
-    #: adds an Exchange + Window per round. The prune is exact either
-    #: way (any host-top-budget row is in its salt's top-budget), so
-    #: ranked output is identical — this is a plan choice, not a
-    #: semantics choice. Production pendings (≫ this) always salt.
-    #: Env-overridable for A/B measurement (0 = always salt).
-    _SALT_SKIP_PENDING = int(os.environ.get("SPARK_GRAFT_SALT_SKIP", "200000"))
+    #: pending-frontier size up to which fetch_seq is one global
+    #: row_number over (host, rank): the batch is ≤ pending rows, so its
+    #: single-partition sort is cheap (narrow rows; 200k ≈ 20 MB). Above
+    #: it the per-host counts are prefix-summed over one row per host.
+    #: Both give the same total order — a plan choice, not a semantics
+    #: choice.
+    _SMALL_PENDING = 200_000
 
-    def _politeness_batch(
-        self, frontier: DataFrame, seq_offset: int, n_pending: int | None = None
-    ):
-        """Salted two-phase per-host top-k + global fetch_seq.
+    def _politeness_batch(self, frontier: DataFrame, seq_offset: int, n_pending: int):
+        """Per-host top-budget by priority + global fetch_seq.
 
-        fetch_seq = seq_offset + exclusive-prefix-sum of per-host batch
-        sizes in host order + within-host rank. The prefix sum is
-        two-level: hosts are range-partitioned (so cross-partition order
-        is exact), each partition cumsums locally in parallel, and only
-        the per-partition totals (≤ shuffle partitions rows) see a
-        single-partition window."""
+        One row_number window over ``host``, cut at ``rn <= budget`` and
+        at the literal ``rn <= k`` (k = the largest per-host budget): the
+        literal bound is what lets Spark plan a partial per-map-task
+        top-k below the host Exchange (see the module notes).
+
+        fetch_seq = seq_offset + exclusive prefix sum of per-host batch
+        sizes in host order + within-host rank."""
         cand = frontier.join(
             F.broadcast(self.robots.select("host", "budget")), "host", "left"
         ).withColumn(
             "budget",
             F.coalesce("budget", F.lit(DEFAULT_BUDGET)) * F.lit(self.budget_scale),
         )
-        order = [F.desc("priority"), F.asc("url_hash"), F.asc("url")]
-        salted = n_pending is None or n_pending > self._SALT_SKIP_PENDING
-        if salted:
-            w1 = Window.partitionBy("host", "salt").orderBy(*order)
-            pre = (
-                cand.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(self.n_salts)))
-                .withColumn("r1", F.row_number().over(w1))
-                .where(F.col("r1") <= F.col("budget"))
-            )
-        else:
-            pre = cand
-        w2 = Window.partitionBy("host").orderBy(*order)
+        w = Window.partitionBy("host").orderBy(
+            F.desc("priority"), F.asc("url_hash"), F.asc("url")
+        )
         ranked = (
-            pre.withColumn("rank", F.row_number().over(w2) - 1)
-            .where(F.col("rank") < F.col("budget"))
-            .drop(*(["salt", "r1", "budget"] if salted else ["budget"]))
+            cand.withColumn("rn", F.row_number().over(w))
+            .where((F.col("rn") <= F.lit(self._max_budget)) & (F.col("rn") <= F.col("budget")))
+            .withColumn("rank", F.col("rn") - 1)
+            .drop("rn", "budget")
         ).persist()
 
-        if not salted:
-            # small-pending regime (same threshold as the salt skip): the
-            # politeness batch is ≤ pending ≤ 200k rows, so one global
-            # row_number over (host, rank) — the identical host-order
-            # prefix + within-host rank total order — replaces the
-            # per-host count aggregation, the offset window, and the
-            # broadcast join (two fewer sub-jobs per round). The batch
-            # side is politeness-bounded, so the single-partition sort is
-            # trivially cheap here; large pendings take the two-level
-            # scan below unchanged.
-            w_seq = Window.orderBy("host", "rank")
+        if n_pending <= self._SMALL_PENDING:
             # row_number is IntegerType: promote BEFORE adding the
             # offset, or a crawl past 2^31 total fetches would wrap
-            # (the salted path's host_base sum is already long)
+            w_seq = Window.orderBy("host", "rank")
             batch = ranked.withColumn(
                 "fetch_seq",
                 (F.row_number().over(w_seq).cast("long") - 1 + F.lit(seq_offset)),
@@ -714,35 +687,10 @@ class CrawlEngine:
             return ranked, batch
 
         counts = ranked.groupBy("host").agg((F.max("rank") + 1).alias("cnt"))
-        if self._two_level_scan:
-            n_parts = self.spark.sparkContext.defaultParallelism
-            parts = counts.repartitionByRange(n_parts, "host").withColumn(
-                "pid", F.spark_partition_id()
-            )
-            w_local = Window.partitionBy("pid").orderBy("host").rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-            w_pid = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-            pid_off = (
-                parts.groupBy("pid")
-                .agg(F.sum("cnt").alias("pcnt"))
-                .select(
-                    "pid", F.coalesce(F.sum("pcnt").over(w_pid), F.lit(0)).alias("poff")
-                )
-            )
-            host_base = parts.join(F.broadcast(pid_off), "pid").select(
-                "host",
-                (F.col("poff") + F.coalesce(F.sum("cnt").over(w_local), F.lit(0))).alias(
-                    "host_base"
-                ),
-            )
-        else:
-            # one row per host: a single cumulative window is cheaper
-            # than the range-partitioner's sampling pass
-            w_host = Window.orderBy("host").rowsBetween(Window.unboundedPreceding, -1)
-            host_base = counts.select(
-                "host", F.coalesce(F.sum("cnt").over(w_host), F.lit(0)).alias("host_base")
-            )
+        w_host = Window.orderBy("host").rowsBetween(Window.unboundedPreceding, -1)
+        host_base = counts.select(
+            "host", F.coalesce(F.sum("cnt").over(w_host), F.lit(0)).alias("host_base")
+        )
         batch = (
             ranked.join(F.broadcast(host_base), "host")
             .withColumn(
@@ -822,7 +770,6 @@ class CrawlEngine:
             self.store.init_engine(
                 {
                     "corpus": self.corpus_dir,
-                    "n_salts": self.n_salts,
                     "bloom": list(self._bloom_cfg),
                     "bloom_mode": self.bloom_mode,
                     "frontier_compact_every": self.frontier_compact_every,
@@ -831,19 +778,16 @@ class CrawlEngine:
                     "budget_scale": self.budget_scale,
                 }
             )
-            t0 = time.perf_counter()
             obs = Observation()
             path = self.store.table_path(-1, "frontier_delta")
             self._seed_frontier().select(*_FRONTIER_COLS).observe(
                 obs, F.count(F.lit(1)).alias("rows")
             ).write.mode("overwrite").parquet(path)
             pending_rows = int(obs.get["rows"])
-            t0 = _trace("bootstrap seed+write", t0)
             # bloom from the durable delta (deterministic lineage)
             self._bloom_update(
                 self._read_frontier(path).select("url_hash"), "url_hash"
             )
-            t0 = _trace("bootstrap bloom", t0)
             self.store.commit_round(
                 -1,
                 {"frontier_delta": (path, pending_rows)},
@@ -890,7 +834,6 @@ class CrawlEngine:
 
             # --- write 1: round_data (fetch log + images + links; its
             # (url_hash,url) columns double as the frontier tombstones) --
-            t0 = time.perf_counter()
             obs1 = Observation()
             rd_path = self.store.table_path(rnd, "round_data")
             extracted.observe(
@@ -902,7 +845,6 @@ class CrawlEngine:
             n_fetched = int(m1["n_fetched"])
             prev_batch = n_fetched
             ranked.unpersist()
-            t0 = _trace(f"r{rnd} politeness+fetch+extract+write", t0)
 
             # --- new links: dedup → robots → bloom → exact seen check ----
             # derived from the DURABLE round_data, not the in-memory
@@ -1002,7 +944,6 @@ class CrawlEngine:
             n_new = int(obs2.get["n_new"])
             prev_new = n_new
             probed.unpersist()
-            t0 = _trace(f"r{rnd} links+seen-check+delta write", t0)
 
             # --- bloom delta (fused via accumulator in broadcast mode;
             # its own distributed append job in partitioned mode) --------
@@ -1014,7 +955,6 @@ class CrawlEngine:
                     self._read_frontier(fr_path).select("url_hash"), "url_hash"
                 )
             self._bloom_release()
-            t0 = _trace(f"r{rnd} bloom delta", t0)
             if (
                 self.bloom_mode == "partitioned"
                 and rnd > 0
@@ -1040,7 +980,6 @@ class CrawlEngine:
                 # anomaly (e.g. duplicate corpus URLs inflating the
                 # resolver join) can't drift silently across rounds
                 pending_rows = brows
-                t0 = _trace(f"r{rnd} frontier compact", t0)
             self.store.commit_round(
                 rnd,
                 tables,

@@ -14,6 +14,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_shuffle_partitions(master: str) -> int:
+    """Shuffle partitions sized to the master's task slots: N for
+    ``local[N]`` / ``local[N,F]``, the host's cores for ``local[*]`` and
+    non-local masters."""
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
+    n = n.split(",")[0].strip()
+    return (os.cpu_count() or 8) if n == "*" else int(n)
+
+
 def get_spark(
     app: str = "scalpel_spark",
     master: str | None = None,
@@ -24,8 +33,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
-        shuffle_partitions = os.cpu_count() or 8 if n == "*" else int(n)
+        shuffle_partitions = default_shuffle_partitions(master)
     # AQE stays ON by default (runtime skew-join mitigation is part of
     # the 100 TB story); SPARK_GRAFT_AQE=0 exists to measure its
     # per-stage replanning latency on many-small-stage pipelines

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 #: Partitions-per-core for Python compute stages. Default 2: one extra
@@ -13,9 +11,9 @@ from pyspark.sql import DataFrame
 #: 1×32 (each tiny task pays ~5 ms of scheduling + Arrow round-trip
 #: setup, serialized through the driver). At production scale per-task
 #: work dwarfs that overhead and a larger factor only smooths the tail;
-#: operators there raise it via this env knob (or pass min_partitions)
-#: rather than every second-scale stage paying 4× task launches.
-_SPREAD_FACTOR = int(os.environ.get("SPARK_GRAFT_SPREAD_FACTOR", "2"))
+#: callers there pass ``min_partitions`` rather than every second-scale
+#: stage paying 4× task launches.
+_SPREAD_FACTOR = 2
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

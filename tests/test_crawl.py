@@ -75,8 +75,30 @@ def _eng_log_tuples(eng):
     ]
 
 
-def test_engine_matches_simulator_exactly(sim_result, engine_result):
-    eng, summary = engine_result
+@pytest.fixture(params=["row_number", "prefix_sum"])
+def fetch_seq_arm(request, monkeypatch):
+    """Both fetch_seq plans: one global row_number over (host, rank)
+    for small pendings, and the per-host count prefix sum the engine
+    takes above ``CrawlEngine._SMALL_PENDING`` (forced here by setting
+    the threshold to 0)."""
+    from scalpel_spark.crawl.engine import CrawlEngine
+
+    if request.param == "prefix_sum":
+        monkeypatch.setattr(CrawlEngine, "_SMALL_PENDING", 0)
+    return request.param
+
+
+def test_engine_matches_simulator_exactly(
+    request, spark, world_dir, sim_result, fetch_seq_arm, tmp_path_factory
+):
+    if fetch_seq_arm == "row_number":
+        eng, summary = request.getfixturevalue("engine_result")
+    else:
+        from scalpel_spark.crawl.engine import CrawlEngine
+
+        out = str(tmp_path_factory.mktemp("crawl_prefix_sum"))
+        eng = CrawlEngine(spark, world_dir, out, max_rounds=MAX_ROUNDS)
+        summary = eng.run()
     assert summary["total_fetched"] == len(sim_result.fetch_log)
     assert _eng_log_tuples(eng) == _sim_log_tuples(sim_result)
 
@@ -231,7 +253,7 @@ def test_http_fetch_mode_matches_simulator(
     assert eng_imgs == sorted(sim_result.images)
 
 
-def test_resume_is_exact(spark, world_dir, sim_result, tmp_path_factory):
+def test_resume_is_exact(spark, world_dir, sim_result, fetch_seq_arm, tmp_path_factory):
     """Run k rounds, stop, resume from the manifest — final fetch log and
     seen set byte-identical to the uninterrupted run."""
     from scalpel_spark.crawl.engine import CrawlEngine
@@ -301,3 +323,22 @@ def test_pending_frontier_plan_broadcasts_tombstones(spark, world_dir, tmp_path_
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "Exchange hashpartitioning" not in plan, plan
+
+
+def test_politeness_plan_has_partial_top_k(spark, world_dir, tmp_path_factory):
+    """Skew bound: the politeness rank's literal cut (the largest
+    per-host budget) must plan as a WindowGroupLimit Partial BELOW the
+    host Exchange, so each map task ships at most k rows per host and a
+    hot host's window partition never holds its whole pending set."""
+    from scalpel_spark.crawl.engine import CrawlEngine
+
+    out = str(tmp_path_factory.mktemp("crawl_plan3"))
+    eng = CrawlEngine(spark, world_dir, out, max_rounds=1)
+    eng.run()
+    ranked, _ = eng._politeness_batch(eng._pending_frontier(1), 0, n_pending=100)
+    ranked.unpersist()
+    plan = ranked._jdf.queryExecution().executedPlan().toString()
+    exchange = plan.find("Exchange hashpartitioning(host")
+    partial = plan.find(f"row_number(), {eng._max_budget}, Partial")
+    assert 0 <= exchange < partial, plan
+    assert plan.count("Window [") == 1, plan

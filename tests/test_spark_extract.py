@@ -86,3 +86,16 @@ def test_prefilter_prunes_python_stage(spark):
         [("x", "<p>plain</p>")], "url string, html string"
     ).filter(pf)
     assert df.count() == 0
+
+
+def test_default_shuffle_partitions_follows_master():
+    """``get_spark`` sizes shuffles to the master's task slots; derived
+    without building a session (only one may exist per process)."""
+    import os
+
+    from scalpel_spark.spark.session import default_shuffle_partitions
+
+    assert default_shuffle_partitions("local[3]") == 3
+    assert default_shuffle_partitions("local[5,2]") == 5
+    assert default_shuffle_partitions("local[*]") == (os.cpu_count() or 8)
+    assert default_shuffle_partitions("spark://host:7077") == (os.cpu_count() or 8)
