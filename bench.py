@@ -128,7 +128,7 @@ def main() -> None:
     # best-of-3 per query: this host's hypervisor steal gives identical
     # Spark jobs 2-10x spread; min is the robust engine-capability
     # estimator (same methodology as the scaling bench / crawl phase)
-    from scalpel_spark.textops import release_candidate_cache
+    from scalpel_spark.spark.util import release_candidate_cache
 
     for name in BENCH_QUERIES:
         fn = QUERIES[name]

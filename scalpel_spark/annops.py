@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .spark.util import spread
+from .spark.util import persist_candidates, spread
 
 
 def _dot(a, b):
@@ -194,27 +194,46 @@ def cosine_similarity_join(
     codegen). O(N²/2) by construction — the exact embedding-near-dup
     baseline; for the sub-quadratic scale path generate candidates with
     ``hyperplane_signatures`` buckets and verify pairs through this same
-    scoring expression."""
-    dvec = F.transform(vec_col, lambda x: x.cast("double"))
-    base = vectors.select(F.col(id_col), dvec.alias("v"), _norm(dvec).alias("n"))
-    a = base.select(
-        F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na")
-    )
+    scorer (``similarity_join_lsh``)."""
     # spread the STREAMED side: the BroadcastNestedLoopJoin's parallelism
     # is its streamed side's partitioning, and a single-file parquet scan
     # is one partition — without this the O(N²) scoring loop runs on one
     # core (measured 21.5 s vs ~1 s at sf0.1 on local[32])
-    b = spread(
-        base.select(
-            F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("n").alias("nb")
-        )
+    return _cos_i4_pairs(
+        lambda a, b: F.broadcast(a).join(spread(b), F.col("id_a") < F.col("id_b")),
+        vectors, threshold, id_col, vec_col,
     )
+
+
+def _cos_i4_pairs(pairs_of, vectors, threshold, id_col, vec_col) -> DataFrame:
+    """The one exact scorer of the cosine similarity joins: (id_a, id_b,
+    cos_i4) with cos_i4 = round(cos·10⁴) ≥ the integer threshold, in
+    DOUBLE and JVM-side (zip_with/aggregate in codegen).
+    ``pairs_of(a, b)`` joins the two vector sides (id_a, va, na) and
+    (id_b, vb, nb) into the pairs to score."""
+    dvec = F.transform(vec_col, lambda x: x.cast("double"))
+    base = vectors.select(F.col(id_col), dvec.alias("v"), _norm(dvec).alias("n"))
+    a = base.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na"))
+    b = base.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("n").alias("nb"))
     cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return (
-        F.broadcast(a)
-        .join(b, F.col("id_a") < F.col("id_b"))
+        pairs_of(a, b)
         .select("id_a", "id_b", F.round(cos * 10000).cast("long").alias("cos_i4"))
         .where(F.col("cos_i4") >= int(round(threshold * 10000)))
+    )
+
+
+def _recall(exact: DataFrame, approx: DataFrame, keys: list[str], *lead) -> DataFrame:
+    """The one recall aggregate of the ANN / similarity-join gates: one
+    row of the ``lead`` aggregates, then (n_exact, n_hit, recall_pct) of
+    ``approx`` against ``exact`` matched on ``keys``."""
+    hit = exact.join(approx.select(*keys, F.lit(1).alias("hit")), keys, "left")
+    n_hit = F.coalesce(F.sum("hit"), F.lit(0))
+    return hit.agg(
+        *lead,
+        F.count(F.lit(1)).alias("n_exact"),
+        n_hit.alias("n_hit"),
+        F.round(n_hit * 100.0 / F.count(F.lit(1)), 1).alias("recall_pct"),
     )
 
 
@@ -231,18 +250,9 @@ def lsh_recall(
     quality gate for the ANN scale path."""
     exact = cosine_topk(vectors, queries, k=k, id_col=id_col, vec_col=vec_col)
     approx = lsh_topk(vectors, queries, k=k, id_col=id_col, vec_col=vec_col, **lsh_kwargs)
-    hit = exact.join(
-        approx.select("query_id", "neighbor_id", F.lit(1).alias("hit")),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return hit.agg(
+    return _recall(
+        exact, approx, ["query_id", "neighbor_id"],
         F.countDistinct("query_id").alias("n_queries"),
-        F.count(F.lit(1)).alias("n_exact"),
-        F.coalesce(F.sum("hit"), F.lit(0)).alias("n_hit"),
-        F.round(F.coalesce(F.sum("hit"), F.lit(0)) * 100.0 / F.count(F.lit(1)), 1).alias(
-            "recall_pct"
-        ),
     )
 
 
@@ -283,11 +293,9 @@ def similarity_join_lsh(
     recall at threshold 0.35 on the test corpus at every sf. Plan
     contains NO BroadcastNestedLoopJoin — gated in
     tests/test_plan_shapes.py."""
-    from .spark.util import persist_candidates as _persist_candidates
-
     # persisted (tiny: id + table + bucket + flag): referenced by both
     # sides of the candidate join — one signature computation per action
-    sigs = _persist_candidates(
+    sigs = persist_candidates(
         hyperplane_signatures(
             vectors, n_tables, n_planes, seed=seed, id_col=id_col,
             vec_col=vec_col, multiprobe=multiprobe, mark_probes=True,
@@ -306,16 +314,9 @@ def similarity_join_lsh(
         )
         .distinct()
     )
-    dvec = F.transform(vec_col, lambda x: x.cast("double"))
-    base = vectors.select(F.col(id_col), dvec.alias("v"), _norm(dvec).alias("n"))
-    va = base.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na"))
-    vb = base.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("n").alias("nb"))
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", F.round(cos * 10000).cast("long").alias("cos_i4"))
-        .where(F.col("cos_i4") >= int(round(threshold * 10000)))
+    return _cos_i4_pairs(
+        lambda a, b: cand.join(a, "id_a").join(b, "id_b"),
+        vectors, threshold, id_col, vec_col,
     )
 
 
@@ -334,18 +335,7 @@ def similarity_join_recall(
     approx = similarity_join_lsh(
         vectors, threshold, id_col=id_col, vec_col=vec_col, **lsh_kwargs
     )
-    hit = exact.join(
-        approx.select("id_a", "id_b", F.lit(1).alias("hit")),
-        ["id_a", "id_b"],
-        "left",
-    )
-    return hit.agg(
-        F.count(F.lit(1)).alias("n_exact"),
-        F.coalesce(F.sum("hit"), F.lit(0)).alias("n_found"),
-        F.round(
-            F.coalesce(F.sum("hit"), F.lit(0)) * 100.0 / F.count(F.lit(1)), 1
-        ).alias("recall_pct"),
-    )
+    return _recall(exact, approx, ["id_a", "id_b"]).withColumnRenamed("n_hit", "n_found")
 
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the centroid-bucketed scale path.
@@ -535,16 +525,7 @@ def ivf_recall(
     quality gate for the IVF scale path (pattern of ``lsh_recall``)."""
     exact = cosine_topk(vectors, queries, k=k, id_col=id_col, vec_col=vec_col)
     approx = ivf_topk(vectors, queries, k=k, id_col=id_col, vec_col=vec_col, **ivf_kwargs)
-    hit = exact.join(
-        approx.select("query_id", "neighbor_id", F.lit(1).alias("hit")),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return hit.agg(
+    return _recall(
+        exact, approx, ["query_id", "neighbor_id"],
         F.countDistinct("query_id").alias("n_queries"),
-        F.count(F.lit(1)).alias("n_exact"),
-        F.coalesce(F.sum("hit"), F.lit(0)).alias("n_hit"),
-        F.round(F.coalesce(F.sum("hit"), F.lit(0)) * 100.0 / F.count(F.lit(1)), 1).alias(
-            "recall_pct"
-        ),
     )

@@ -47,20 +47,20 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
 
 _CANDIDATE_CACHE: list = []
 
+#: Partition count of every persisted frame. These frames are tiny but
+#: often produced by a spread-wide Python stage (``_SPREAD_FACTOR`` ×
+#: cores partitions), and every downstream plan reference scans ALL
+#: cached partitions — five references × 128 cached partitions is ~640
+#: task launches of near-empty work. A repartition (never coalesce —
+#: that would narrow the producing stage itself) makes each reference
+#: ~8 tasks.
+_CANDIDATE_PARTITIONS = 8
 
-def persist_candidates(df: DataFrame, npartitions: int | None = 8) -> DataFrame:
-    """Persist a (small) frame and register it for bulk release.
 
-    ``npartitions`` narrows the cached layout first (default 8): these
-    frames are tiny but often produced by a spread-wide Python stage
-    (~4× cores partitions), and every downstream plan reference scans
-    ALL cached partitions — five references × 128 cached partitions is
-    ~640 task launches of near-empty work. A repartition (never
-    coalesce — that would narrow the producing stage itself) makes each
-    reference ~8 tasks. Pass None to keep the input partitioning."""
-    if npartitions:
-        df = df.repartition(npartitions)
-    df = df.persist()
+def persist_candidates(df: DataFrame) -> DataFrame:
+    """Persist a (small) frame, narrowed to ``_CANDIDATE_PARTITIONS``,
+    and register it for bulk release."""
+    df = df.repartition(_CANDIDATE_PARTITIONS).persist()
     _CANDIDATE_CACHE.append(df)
     return df
 

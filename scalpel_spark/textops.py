@@ -25,18 +25,12 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .crawl.bloom import _fmix64_np
-from .spark.util import spread
-
-# the persisted-frame registry lives in spark.util (it is cross-module
-# infrastructure — annops and queries use it too); re-exported here for
-# callers that import it from the text-op module
-from .spark.util import persist_candidates as _persist_candidates  # noqa: E402
-from .spark.util import release_candidate_cache  # noqa: F401, E402
+from .spark.util import persist_candidates, spread
 
 
 # ---------------------------------------------------------------------------
@@ -127,20 +121,31 @@ def _shingle_hashes_from_words(wh: np.ndarray, k: int) -> np.ndarray:
         return _fmix64_np(acc)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    n_hashes: int = 64,
-    shingle_k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, sig: array<bigint>) — vectorized: per doc, one numpy
-    (n_shingles × n_hashes) min-reduction using splitmix-style remixes of
-    the shingle hashes (no per-hash python loops over shingles)."""
-    seeds = np.arange(1, n_hashes + 1, dtype=np.uint64) * np.uint64(
-        0x9E3779B97F4A7C15
-    )
+#: minhash signature length, banded by ``lsh_candidate_pairs`` into
+#: ``_N_BANDS`` bands of ``_N_HASHES // _N_BANDS`` rows
+_N_HASHES = 64
+_N_BANDS = 16
+_SEEDS = np.arange(1, _N_HASHES + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
+#: word-shingle width of the minhash/simhash features and of
+#: ``shingle_set_col``; char-gram width of ``char_minhash_signatures``
+#: and ``char_ngram_set_col`` — one constant per feature space, so the
+#: blocking signatures and the exact verifier see the same features
+_SHINGLE_K = 3
+_NGRAM_N = 4
 
+
+def _shingle_hash_arrays(texts) -> list[np.ndarray]:
+    """Per-doc k-word shingle hashes (k = ``_SHINGLE_K``) for an Arrow
+    batch."""
+    return [_shingle_hashes_from_words(wh, _SHINGLE_K) for wh in _word_hash_arrays(texts)]
+
+
+def _minhash(df: DataFrame, feature_hashes, text_col: str, id_col: str) -> DataFrame:
+    """(id, sig: array<bigint>) — the one minhash kernel.
+    ``feature_hashes(texts)`` returns one uint64 feature-hash array per
+    doc of an Arrow batch; each signature is one numpy
+    (n_features × _N_HASHES) min-reduction over splitmix-style remixes
+    fmix64(feature ^ seed) (no per-hash Python loops over features)."""
     schema = T.StructType(
         [
             T.StructField(id_col, df.schema[id_col].dataType),
@@ -150,25 +155,26 @@ def minhash_signatures(
 
     def gen(batches):
         for pdf in batches:
-            ids = pdf[id_col].tolist()
-            sigs = []
-            for wh in _word_hash_arrays(pdf[text_col]):
-                sh = _shingle_hashes_from_words(wh, shingle_k)
-                # remix: fmix64(shingle ^ seed) — distinct hash per seed
-                m = _fmix64_np(sh[:, None] ^ seeds[None, :])
-                sigs.append(m.min(axis=0).astype(np.int64).tolist())
-            yield pd.DataFrame({id_col: ids, "sig": sigs})
+            sigs = [
+                _fmix64_np(fh[:, None] ^ _SEEDS[None, :]).min(axis=0).astype(np.int64).tolist()
+                for fh in feature_hashes(pdf[text_col])
+            ]
+            yield pd.DataFrame({id_col: pdf[id_col].tolist(), "sig": sigs})
 
     return spread(df.select(id_col, text_col)).mapInPandas(gen, schema)
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame, n_bands: int = 16, id_col: str = "doc_id"
+def minhash_signatures(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
+    """(id, sig) minhash over k-word shingles (k = ``_SHINGLE_K``)."""
+    return _minhash(df, _shingle_hash_arrays, text_col, id_col)
+
+
+def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Band the signatures; docs sharing any band bucket are candidates.
     Shuffle key = (band, band_hash) → bucket-local self-join only."""
-    n_hashes = 64  # length of sig arrays; bands of n_hashes/n_bands rows
-    rows = n_hashes // n_bands
+    rows = _N_HASHES // _N_BANDS
     bands = sigs.select(
         id_col,
         F.posexplode(
@@ -177,7 +183,7 @@ def lsh_candidate_pairs(
                     F.xxhash64(
                         F.lit(b), *[F.col("sig")[b * rows + r] for r in range(rows)]
                     )
-                    for b in range(n_bands)
+                    for b in range(_N_BANDS)
                 ]
             )
         ).alias("band", "band_hash"),
@@ -215,25 +221,7 @@ def minhash_jaccard_pairs(
     )
 
 
-def minhash_neardup(
-    df: DataFrame,
-    threshold: float = 0.8,
-    n_bands: int = 16,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """shingle → minhash → band → bucket-join → estimate ≥ threshold.
-
-    The signature frame is persisted (tiny: id + 64 int64s per doc):
-    the banding self-join references it on both sides and the estimate
-    join twice more — without the cache the Arrow signature stage runs
-    4× per action."""
-    sigs = _persist_candidates(minhash_signatures(df, shingle_k=shingle_k))
-    pairs = lsh_candidate_pairs(sigs, n_bands=n_bands)
-    est = minhash_jaccard_pairs(sigs, pairs)
-    return est.where(F.col("est_jaccard") >= threshold)
-
-
-def shingle_set_col(text_col, k: int = 3):
+def shingle_set_col(text_col, k: int = _SHINGLE_K):
     """JVM-side distinct k-word shingle array (lowercased ``\\w+`` words,
     space-joined) — byte-identical to the DuckDB oracle's construction,
     so exact-jaccard verification is cross-engine comparable."""
@@ -254,69 +242,55 @@ def exact_jaccard_verify(
     pairs: DataFrame,
     docs: DataFrame,
     threshold: float = 0.5,
-    shingle_k: int = 3,
+    features=shingle_set_col,
+    screen_sigs: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    est_screen: bool = False,
 ) -> DataFrame:
-    """Exact shingle-set jaccard for candidate pairs, entirely JVM-side
-    (array_intersect / array_distinct in codegen); emits
-    (id_a, id_b, jacc_i4) with jacc_i4 = round(j·10⁴) ≥ the integer
-    threshold — the verification stage of the candidate→verify dedup
-    pipeline. Shuffles carry only (id, shingle-array) for candidates,
-    never the corpus.
+    """The verify stage of every candidate→verify near-dup join: exact
+    set jaccard of candidate pairs, entirely JVM-side (array_intersect /
+    array_distinct in codegen); emits (id_a, id_b, jacc_i4) with
+    jacc_i4 = round(j·10⁴) ≥ the integer threshold. Shuffles carry only
+    (id, feature-array) for candidate docs, never the corpus.
 
-    Scale bound: the semi-join prune below BROADCASTS the candidate-id
-    set, so callers must keep |candidates| broadcast-sized (the same
-    contract as the pair-frame broadcasts in this plan). A candidate
-    generator that emits corpus-scale pair sets (degenerate corpus +
-    weak blocking) needs the est_screen or a pre-filter first — the
-    broadcast failing loudly is preferable to silently shuffling the
-    corpus text, which is what Catalyst picked without the hint.
+    ``features(text_col)`` builds each doc's distinct feature array:
+    word shingles (``shingle_set_col``, the default) or char n-grams
+    (``char_ngram_set_col``).
 
-    ``est_screen=True`` inserts a signature-estimate screen between
-    candidates and exact verify: 64-hash minhash signatures are computed
-    for candidate docs only, and pairs with est_jaccard <
-    threshold − 0.15 (≈3σ of the estimator below the cut) are dropped
-    before the ~10²-element shingle arrays are ever built. Use it for
-    candidate generators whose selectivity is weak in jaccard terms
-    (e.g. wide-k simhash blocking): verify cost then follows TRUE
-    near-dups rather than the candidate background."""
-    # the candidate subtree is referenced three times below (pairs, and
-    # both sides of the id prune) — persist so the (possibly expensive)
-    # blocking join runs once per action, not three times; the cached
-    # frame is just the candidate id pairs, tiny by construction
-    # (registered for release_candidate_cache())
-    pairs = _persist_candidates(pairs.select("id_a", "id_b").distinct())
+    ``screen_sigs`` is the minhash signature frame the candidates were
+    banded from. When given, pairs whose signature-estimated jaccard is
+    below threshold − 0.15 (≈3σ of the 64-hash estimator below the cut)
+    are dropped before any feature array is built — for blockers whose
+    selectivity is weak in jaccard terms, verify cost then follows TRUE
+    near-dups rather than the candidate background.
 
-    def _prune(p):
-        # shingle arrays / signatures are built ONLY for docs that appear
-        # in a candidate pair (semi-join prune): verification cost scales
-        # with the candidate set, not the corpus. The id set is BROADCAST
-        # (bounded by 2×|candidates|, the same order as the pair frames
-        # already broadcast below) — without the hint Catalyst can't size
-        # the cached-union subtree and sort-merge-shuffles the DOCUMENT
-        # TEXT for a semi join against a few hundred ids
-        ids = (
-            p.select(F.col("id_a").alias(id_col))
-            .unionByName(p.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        return docs.join(F.broadcast(ids), id_col, "left_semi")
-
-    if est_screen:
-        sigs = minhash_signatures(
-            _prune(pairs), shingle_k=shingle_k, text_col=text_col, id_col=id_col
-        )
-        pairs = _persist_candidates(
-            minhash_jaccard_pairs(sigs, pairs, id_col=id_col)
+    Broadcast contract: only docs that appear in a candidate pair are
+    read (semi-join prune), and that candidate-id set is BROADCAST. It
+    is bounded by 2×|candidates|, so callers must keep the candidate set
+    broadcast-sized. A corpus-scale candidate set (degenerate corpus +
+    weak blocking) needs ``screen_sigs`` or a pre-filter first: the
+    broadcast failing loudly beats silently shuffling the corpus text,
+    which is what Catalyst picks without the hint (it cannot size the
+    cached-union subtree)."""
+    pairs = pairs.select("id_a", "id_b").distinct()
+    if screen_sigs is not None:
+        pairs = (
+            minhash_jaccard_pairs(screen_sigs, pairs, id_col=id_col)
             .where(F.col("est_jaccard") >= threshold - 0.15)
             .select("id_a", "id_b")
         )
-    needed = _prune(pairs)
-    sh = needed.select(
-        F.col(id_col), shingle_set_col(F.col(text_col), shingle_k).alias("sh")
+    # the candidate frame is referenced three times below (pairs, and
+    # both sides of the id prune) — persist so the (possibly expensive)
+    # blocking join runs once per action; the cached frame is just the
+    # candidate id pairs, tiny by construction
+    pairs = persist_candidates(pairs)
+    ids = (
+        pairs.select(F.col("id_a").alias(id_col))
+        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
+        .distinct()
     )
+    needed = docs.join(F.broadcast(ids), id_col, "left_semi")
+    sh = needed.select(F.col(id_col), features(F.col(text_col)).alias("sh"))
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
     j = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
@@ -328,6 +302,17 @@ def exact_jaccard_verify(
         .select("id_a", "id_b", F.round(j * 10000).cast("long").alias("jacc_i4"))
         .where(F.col("jacc_i4") >= int(round(threshold * 10000)))
     )
+
+
+def minhash_neardup(df: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """shingle → minhash → band → exact jaccard verify: (id_a, id_b,
+    jacc_i4) with jaccard ≥ threshold.
+
+    The signature frame is persisted (tiny: id + 64 int64s per doc):
+    the banding self-join references it on both sides — uncached, the
+    Arrow signature stage runs twice per action."""
+    sigs = persist_candidates(minhash_signatures(df))
+    return exact_jaccard_verify(lsh_candidate_pairs(sigs), df, threshold)
 
 
 def neardup_clusters(
@@ -385,7 +370,7 @@ def simhash64(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_k: int = 3,
+    shingle_k: int = _SHINGLE_K,
 ) -> DataFrame:
     """64-bit simhash: per-doc numpy bit-vote over k-word shingle hashes.
 
@@ -460,7 +445,7 @@ def hamming_neardup_pairs(
     # distinct) both sides of the chunk-key self-join — six plan
     # references; uncached, the upstream signature computation (an Arrow
     # python stage for simhash/phash callers) would run six times
-    base = _persist_candidates(
+    base = persist_candidates(
         sigs.select(F.col(id_col).alias("_id"), F.col(sig_col).alias("_sig"))
     )
     if max_hamming == 0:
@@ -522,7 +507,7 @@ def hamming_neardup_pairs(
     else:
         # persisted: referenced by both sides of the chunk-key self-join
         # and by the hamming-0 diagonal below
-        uniq = _persist_candidates(base.select("_sig").distinct())
+        uniq = persist_candidates(base.select("_sig").distinct())
         carry = []
     if pair_block:
         arr = uniq.select(
@@ -759,50 +744,31 @@ def doc_fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id
 # word-boundary edits where word-shingles shift)
 
 
-def _char_ngram_lists(texts, n: int) -> list[list[str]]:
-    out = []
+def _char_ngram_hashes(texts) -> list[np.ndarray]:
+    """Per-doc distinct char-n-gram hashes (n = ``_NGRAM_N``) for an
+    Arrow batch. Gram slicing is a per-doc Python comprehension but all
+    hashing is one flat vectorized FNV pass per batch; texts of length
+    ≤ n contribute themselves as the single gram."""
+    n = _NGRAM_N
+    gram_lists = []
     for t in texts:
         t = (t or "").lower()
-        out.append([t[i : i + n] for i in range(len(t) - n + 1)] if len(t) > n else [t])
-    return out
+        gram_lists.append([t[i : i + n] for i in range(len(t) - n + 1)] if len(t) > n else [t])
+    counts = np.fromiter((len(g) for g in gram_lists), np.int64, len(gram_lists))
+    flat = _fnv1a_many([g for gs in gram_lists for g in gs])
+    split = np.split(flat, np.cumsum(counts)[:-1]) if gram_lists else []
+    return [np.unique(gh) for gh in split]
 
 
 def char_minhash_signatures(
-    df: DataFrame,
-    n_hashes: int = 64,
-    ngram_n: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, sig) minhash over character n-grams — same vectorized
-    min-reduction as ``minhash_signatures``, different feature space.
-    Gram slicing is a per-doc Python comprehension but all hashing is
-    one flat vectorized FNV pass per Arrow batch."""
-    seeds = np.arange(1, n_hashes + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-    schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField("sig", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            gram_lists = _char_ngram_lists(pdf[text_col], ngram_n)
-            counts = np.fromiter((len(g) for g in gram_lists), np.int64, len(gram_lists))
-            flat = _fnv1a_many([g for gs in gram_lists for g in gs])
-            sigs = []
-            for gh in np.split(flat, np.cumsum(counts)[:-1]) if len(gram_lists) else []:
-                gh = np.unique(gh)
-                m = _fmix64_np(gh[:, None] ^ seeds[None, :])
-                sigs.append(m.min(axis=0).astype(np.int64).tolist())
-            yield pd.DataFrame({id_col: ids, "sig": sigs})
-
-    return spread(df.select(id_col, text_col)).mapInPandas(gen, schema)
+    """(id, sig) minhash over character n-grams (n = ``_NGRAM_N``) —
+    the ``minhash_signatures`` kernel over a different feature space."""
+    return _minhash(df, _char_ngram_hashes, text_col, id_col)
 
 
-def char_ngram_set_col(text_col, n: int = 4):
+def char_ngram_set_col(text_col, n: int = _NGRAM_N):
     """JVM-side distinct char-n-gram array, construction-identical to
     the DuckDB oracle (1-based substr over lowercased text; texts of
     length ≤ n contribute themselves as the single gram)."""
@@ -814,53 +780,28 @@ def char_ngram_set_col(text_col, n: int = 4):
 
 def ngram_jaccard_neardup(
     df: DataFrame,
-    ngram_n: int = 4,
     threshold: float = 0.8,
-    n_bands: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """char-n-gram minhash → LSH banding → EXACT char-n-gram jaccard
-    verification ≥ threshold: (id_a, id_b, jacc_i4). Candidate cost is
-    bucket-local; exact verification is semi-join-pruned to candidate
-    docs and runs entirely in codegen (array_intersect/array_distinct)."""
-    sigs = _persist_candidates(
-        char_minhash_signatures(df, ngram_n=ngram_n, text_col=text_col, id_col=id_col)
-    )
-    raw = lsh_candidate_pairs(sigs, n_bands=n_bands, id_col=id_col)
-    # char-n-gram feature spaces have HIGH background jaccard (common
-    # English 4-grams put unrelated docs at j≈0.2-0.45), so banding
-    # alone admits a large candidate set. Screen candidates by the
-    # signature-estimated jaccard (64 int comparisons) at threshold−0.15
-    # (≈3σ of the 64-hash estimator below the cut: σ=√(j(1−j)/64)≈0.05,
-    # so a TRUE pair at exactly the threshold is dropped with p≈0.001 —
-    # the registered exact oracle stays deterministic in practice) before
-    # touching the ~10³-element gram arrays: verify cost follows TRUE
-    # near-dups, not the background. Same probabilistic-recall contract
-    # as banding.
-    pairs = _persist_candidates(
-        minhash_jaccard_pairs(sigs, raw, id_col=id_col)
-        .where(F.col("est_jaccard") >= threshold - 0.15)
-        .select("id_a", "id_b")
-    )
-    # broadcast for the same reason as exact_jaccard_verify._prune: the
-    # candidate-id set is small by contract; without the hint the corpus
-    # text is shuffled for the semi join
-    ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    needed = df.join(F.broadcast(ids), id_col, "left_semi")
-    sh = needed.select(F.col(id_col), char_ngram_set_col(F.col(text_col), ngram_n).alias("gr"))
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("gr").alias("gr_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("gr").alias("gr_b"))
-    j = F.size(F.array_intersect("gr_a", "gr_b")) / F.size(
-        F.array_distinct(F.concat("gr_a", "gr_b"))
-    )
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", F.round(j * 10000).cast("long").alias("jacc_i4"))
-        .where(F.col("jacc_i4") >= int(round(threshold * 10000)))
+    verification ≥ threshold: (id_a, id_b, jacc_i4).
+
+    Char-n-gram feature spaces have HIGH background jaccard (common
+    English 4-grams put unrelated docs at j≈0.2-0.45), so banding alone
+    admits a large candidate set: verify screens candidates by their
+    signature estimate first (``screen_sigs``). At threshold − 0.15 a
+    TRUE pair at exactly the threshold is dropped with p≈0.001
+    (σ=√(j(1−j)/64)≈0.05) — the same probabilistic-recall contract as
+    banding, and the registered exact oracle stays deterministic in
+    practice."""
+    sigs = persist_candidates(char_minhash_signatures(df, text_col=text_col, id_col=id_col))
+    return exact_jaccard_verify(
+        lsh_candidate_pairs(sigs, id_col=id_col),
+        df,
+        threshold,
+        features=char_ngram_set_col,
+        screen_sigs=sigs,
+        id_col=id_col,
+        text_col=text_col,
     )

@@ -230,6 +230,60 @@ def test_fingerprint_matches_sequential_reference(spark, docs_with_dups):
         assert got[row.doc_id] == ref(row.text), row.doc_id
 
 
+def test_minhash_matches_sequential_reference(spark, docs_with_dups):
+    """Both minhash feature spaces go through one kernel: each signature
+    equals a per-doc loop of min over features of fmix64(feature ^ seed),
+    with the features built by sequential FNV-1a (3-word shingles via the
+    polynomial combine + fmix64; distinct char 4-grams)."""
+    from scalpel_spark.crawl.bloom import _fmix64_np
+    from scalpel_spark.textops import (
+        _WORD_RE,
+        char_minhash_signatures,
+        minhash_signatures,
+    )
+
+    m64 = (1 << 64) - 1
+
+    def fnv(s):
+        h = 1469598103934665603
+        for byte in s.encode():
+            h = ((h ^ byte) * 1099511628211) & m64
+        return h
+
+    def shingles(text):
+        wh = [fnv(w) for w in _WORD_RE.findall(text.lower())]
+        k = min(3, len(wh))
+        out = []
+        for i in range(len(wh) - k + 1):
+            acc = wh[i]
+            for j in range(1, k):
+                acc = (acc * 0x100000001B3 + wh[i + j]) & m64
+            out.append(acc)
+        return _fmix64_np(np.array(out or [0], dtype=np.uint64))
+
+    def grams(text):
+        t = text.lower()
+        gs = [t[i : i + 4] for i in range(len(t) - 3)] if len(t) > 4 else [t]
+        return np.array(sorted({fnv(g) for g in gs}), dtype=np.uint64)
+
+    def ref(features):
+        sig = []
+        for i in range(1, 65):
+            seed = np.uint64((i * 0x9E3779B97F4A7C15) & m64)
+            sig.append(int(_fmix64_np(features ^ seed).min().astype(np.int64)))
+        return sig
+
+    texts = {r.doc_id: r.text for r in docs_with_dups.collect()}
+    for sigs, features in (
+        (minhash_signatures(docs_with_dups), shingles),
+        (char_minhash_signatures(docs_with_dups), grams),
+    ):
+        got = {r.doc_id: list(r.sig) for r in sigs.collect()}
+        assert got.keys() == texts.keys()
+        for doc_id, text in texts.items():
+            assert got[doc_id] == ref(features(text)), doc_id
+
+
 def test_ann_lsh_recall_gate(spark):
     """r1 fix: single-table 12-plane LSH had recall ≈ 0. The multi-table
     + multiprobe configuration must reach ≥ 0.9 measured recall against
@@ -421,22 +475,20 @@ class TestAudio:
         assert got[1]["duration_ms"] == 500
 
 
-def test_exact_jaccard_verify_est_screen_same_pairs(spark, docs_with_dups):
-    """est_screen=True must return the same verified pair set (the
-    screen only drops pairs ~3 sigma below the threshold, which exact
-    verification would reject anyway) — the option trades stages for
-    verify volume, never answers."""
-    from pyspark.sql import functions as F
-
+def test_exact_jaccard_verify_screen_sigs_same_pairs(spark, docs_with_dups):
+    """Screening candidates by their signature estimate (``screen_sigs``)
+    must return the same verified pair set: the screen only drops pairs
+    ~3 sigma below the threshold, which exact verification would reject
+    anyway — it trades stages for verify volume, never answers."""
+    from scalpel_spark.spark.util import release_candidate_cache
     from scalpel_spark.textops import (
         exact_jaccard_verify,
         lsh_candidate_pairs,
         minhash_signatures,
-        release_candidate_cache,
     )
 
     sigs = minhash_signatures(docs_with_dups)
-    cand = lsh_candidate_pairs(sigs, n_bands=16)
+    cand = lsh_candidate_pairs(sigs)
     plain = {
         (r["id_a"], r["id_b"], r["jacc_i4"])
         for r in exact_jaccard_verify(cand, docs_with_dups, 0.5).collect()
@@ -444,7 +496,7 @@ def test_exact_jaccard_verify_est_screen_same_pairs(spark, docs_with_dups):
     screened = {
         (r["id_a"], r["id_b"], r["jacc_i4"])
         for r in exact_jaccard_verify(
-            cand, docs_with_dups, 0.5, est_screen=True
+            cand, docs_with_dups, 0.5, screen_sigs=sigs
         ).collect()
     }
     release_candidate_cache()

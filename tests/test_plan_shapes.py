@@ -95,3 +95,17 @@ def test_lsh_similarity_join_is_not_quadratic(spark, catalog):
     plan = _plan(catalog["embedding_similarity_join_lsh"](spark, SF))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["minhash_neardup_docs", "simhash_neardup_docs", "ngram_jaccard_neardup_docs"],
+)
+def test_neardup_candidate_prune_broadcasts_ids(spark, catalog, name):
+    """exact_jaccard_verify reads only candidate docs through a semi
+    join against the candidate-id set. That set must be broadcast: a
+    SortMergeJoin LeftSemi here shuffles the document text."""
+    semis = [line for line in _plan(catalog[name](spark, SF)).splitlines() if "LeftSemi" in line]
+    assert semis, name
+    for line in semis:
+        assert "BroadcastHashJoin" in line and "SortMergeJoin" not in line, line
